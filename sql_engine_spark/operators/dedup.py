@@ -313,32 +313,171 @@ def _ceil_frac(sz: Column, threshold: float) -> Column:
 
 def _alpha(sz_a: Column, sz_b: Column, threshold: float) -> Column:
     """⌈t/(1+t)·(|A|+|B|)⌉ — the PPJoin overlap lower bound for
-    J(A,B) ≥ t — in exact integer arithmetic. The ONE shared copy for
-    every positional-prune call site (Jaccard self-join, both
-    incremental probes): the idiom includes the explicit long casts
-    (F.size() emits int32; under ANSI mode (sz_a+sz_b)·num overflows
-    int32 at ~1343 shingles per doc — a routine web-document size —
-    and kills the probe job), and a fix here fixes all of them."""
+    J(A,B) ≥ t — in exact integer arithmetic, for
+    :func:`_jaccard_bounds`. The explicit long casts matter: F.size()
+    emits int32, and under ANSI mode (sz_a+sz_b)·num overflows int32
+    at ~1343 shingles per doc — a routine web-document size — and
+    kills the probe job."""
     num = round(threshold * 1_000_000)
     denom = 1_000_000 + num
     total = sz_a.cast("long") + sz_b.cast("long")
     return F.floor((total * num + (denom - 1)) / F.lit(denom))
 
 
-def _prefix_tokens(sh: DataFrame, threshold: float, prefix_order: str) -> DataFrame:
-    """(id, sz, p, s) rows for each doc's PREFIX shingles, positioned in
-    the chosen global total order. Any global order is exact for the
-    prefix filter (Bayardo et al.); see :func:`ngram_jaccard_pairs` for
-    the skew tradeoff between the two orders."""
-    prefix_len = (F.col("sz") - _ceil_frac(F.col("sz"), threshold) + 1).cast("int")
+def _prefix_tokens(sh: DataFrame, threshold: "float | None", prefix_order: str) -> DataFrame:
+    """(id, sz, p, s) rows for each doc's PREFIX shingles (the first
+    sz − ⌈t·sz⌉ + 1), positioned in the chosen global total order; with
+    ``threshold`` None, every shingle — the inverted-index side of a
+    one-sided probe. Any global order is exact for the prefix filter
+    (Bayardo et al.); see :func:`ngram_jaccard_pairs` for the skew
+    tradeoff between the two orders."""
     if prefix_order == "hash":
         # shingle_hashes already emits hash-sorted arrays.
-        return sh.select("id", "sz", F.posexplode(F.slice("sh", 1, prefix_len)).alias("p", "s"))
-    if prefix_order != "df":
+        osh = sh.select("id", "sz", F.col("sh").alias("osh"))
+    elif prefix_order == "df":
+        osh = ordered_shingle_index(sh)
+    else:
         raise ValueError(f"prefix_order must be 'df' or 'hash', got {prefix_order!r}")
-    return ordered_shingle_index(sh).select(
-        "id", "sz", F.posexplode(F.slice("osh", 1, prefix_len)).alias("p", "s")
+    if threshold is not None:
+        prefix_len = (F.col("sz") - _ceil_frac(F.col("sz"), threshold) + 1).cast("int")
+        return osh.select("id", "sz", F.posexplode(F.slice("osh", 1, prefix_len)).alias("p", "s"))
+    return osh.select("id", "sz", F.posexplode("osh").alias("p", "s"))
+
+
+def _jaccard_bounds(threshold: float) -> Column:
+    """Exact PPJoin prune for J(a, b) ≥ t over the :func:`_prefix_join`
+    sides ``a``/``b``, both exploded in the SAME global order:
+
+    - length: J ≥ t requires t·max(|A|,|B|) ≤ min(|A|,|B|), i.e. both
+      t·|A| ≤ |B| and t·|B| ≤ |A|, cross-multiplied to integers.
+    - positional: J ≥ t ⟺ overlap ≥ α = ⌈t/(1+t)·(|A|+|B|)⌉, and the
+      smallest common shingle sits at 0-based position ≤ |A| − α in A
+      AND ≤ |B| − α in B, so a pair first meeting at (p_a, p_b) with
+      min(|A| − p_a, |B| − p_b) < α cannot qualify. A token deep in
+      its array (the df-order hot-shingle tail) generates nothing.
+
+    Exact for the self-join (both sides prefixes) and for the
+    one-sided incremental probes (prefix ⋈ full index)."""
+    num = round(threshold * 1_000_000)
+    sz_a, sz_b = F.col("a.sz"), F.col("b.sz")
+    return (F.least(sz_a, sz_b) * 1_000_000 >= F.greatest(sz_a, sz_b) * num) & (
+        F.least(sz_a - F.col("a.p"), sz_b - F.col("b.p")) >= _alpha(sz_a, sz_b, threshold)
     )
+
+
+def _containment_bounds(threshold: float) -> Column:
+    """Exact prune for containment C(a→b) = |Sa ∩ Sb| / |Sa| ≥ t, with
+    ``a`` the prefix side and ``b`` the full df-ordered index:
+
+    - length: |Sb| ≥ t·|Sa| (since |Sa∩Sb| ≤ |Sb|), cross-multiplied.
+    - positional: overlap o ≥ K = ⌈t·|Sa|⌉, and with BOTH arrays in
+      the same global order the smallest common shingle c₁ is preceded
+      in b only by non-common shingles — all o common shingles sit at
+      or after it — so c₁'s 0-based position satisfies p_b ≤ |Sb| − K.
+      Requiring |Sb| − p_b ≥ K keeps c₁ for every true pair; the
+      a-side p_a ≤ |Sa| − K is the prefix slice itself.
+
+    The b-side prune targets the boilerplate tail: a stop-phrase
+    shingle shared by m docs sits LAST in every df-ordered array, so
+    it fails |Sb| − p_b ≥ K instead of emitting m(m−1) candidate
+    pairs (sf0.1: 570k → 462k distinct candidates; on a
+    boilerplate-heavy crawl the pruned tail is exactly the hot set)."""
+    num = round(threshold * 1_000_000)
+    return (F.col("b.sz") * 1_000_000 >= F.col("a.sz") * num) & (
+        F.col("b.sz") - F.col("b.p") >= _ceil_frac(F.col("a.sz"), threshold)
+    )
+
+
+def _prefix_join(
+    probe: DataFrame,
+    index: DataFrame,
+    pred: Column,
+    n_sc: "int | None",
+    pin: "str | None" = "shuffle_hash",
+) -> DataFrame:
+    """The PPJoin candidate kernel shared by every prefix-filtered
+    near-dup operator: distinct (id_a, id_b) pairs whose ``probe`` and
+    ``index`` rows share a shingle ``s`` and satisfy ``pred``, returned
+    hash-partitioned on ``id_a`` when pinned (below).
+
+    ``probe`` and ``index`` are (id, sz, p, s) frames (see
+    :func:`_prefix_tokens`), aliased ``a`` and ``b`` for ``pred`` — a
+    :func:`_jaccard_bounds` / :func:`_containment_bounds` Column plus
+    any id condition (``a.id < b.id`` for a self-join). A frame with
+    only (id, s) works when ``pred`` needs nothing else (the MinHash
+    band self-join).
+
+    Join strategy. Both sides of every corpus-scaled join here are
+    exploded shingle tables, yet compressed file sizes propagated
+    through project/explode under-state their in-memory size 10–50×;
+    at a 125× sf0.1 replica AQE slipped such sides under the broadcast
+    threshold and killed the driver ("Not enough memory to build and
+    broadcast", r13). So ``pin`` (default ``"shuffle_hash"``) hints
+    the probe side as the per-partition hash build: never broadcast,
+    and no sort of the larger index side — a merge pin sorted the 60M
+    exploded index rows and ran 1.7× slower at 125×. ``pin=None``
+    leaves the strategy to the planner, for a trigger-bounded
+    micro-batch probe that SHOULD broadcast (then the full corpus
+    index is never exchanged). Both sides are clustered on ``s`` at
+    the corpus-scaled count ``n_sc`` (the 250× no-spill wall,
+    :func:`scaled_join_partitions`); None leaves them to the join.
+
+    Pair dedup. Pinned, the RAW pairs are hash-partitioned on the
+    probe key BEFORE the dedup (:func:`_cluster_always`): hash(id_a)
+    satisfies both the dedup's ClusteredDistribution(id_a, id_b) and
+    the pinned verify join's ClusteredDistribution(id_a), so one
+    exchange replaces two (r16; prefix collisions duplicate a pair
+    only ~1.2× at sf0.1). Unpinned, the verify may broadcast its probe
+    side, so the dedup keeps its map-side-combined (id_a, id_b)
+    exchange.
+
+    Exchanges keyed on ``s``: one per side, each carrying only that
+    side's exploded rows. x38 containment's executed (AQE final) plan
+    holds exactly 2 outside its memoized index artifacts: the probe's
+    prefix-only posexplode(slice(osh, 1, prefix_len)) and the full
+    index posexplode(osh). The sides are different explodes, so there
+    is no ReusedExchange (tests/test_plans.py pins the count)."""
+    a = _cluster(probe, n_sc, "s")
+    a = (a.hint(pin) if pin else a).alias("a")
+    b = _cluster(index, n_sc, "s").alias("b")
+    raw = a.join(b, (F.col("a.s") == F.col("b.s")) & pred).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
+    )
+    if pin:
+        raw = _cluster_always(raw, n_sc, "id_a")
+    return raw.dropDuplicates(["id_a", "id_b"])
+
+
+def _verify(
+    cands: DataFrame,
+    a: DataFrame,
+    b: DataFrame,
+    score: Column,
+    keep: Column,
+    n_sc: "int | None",
+    pin: "str | None" = "shuffle_hash",
+) -> DataFrame:
+    """The exact verify kernel: fetch both shingle arrays of every
+    candidate (id_a, id_b) — ``a``/``b`` are (id, sh, sz) indexes,
+    renamed to (id_a, sh_a, sz_a) / (id_b, sh_b, sz_b) — keep the
+    pairs where ``keep`` holds and emit (id_a, id_b, ``score``), both
+    Columns over those names (typically via
+    size(array_intersect(sh_a, sh_b))).
+
+    Both joins are shuffle-hash for the :func:`_prefix_join` reason,
+    with build sides chosen so the fat array-carrying stream is never
+    sorted: join 1 builds the narrow ``cands`` (``pin``; None leaves a
+    micro-batch ``a`` to the planner, unclustered), join 2 always
+    builds the per-partition-bounded ``b`` array side — a merge pin
+    sorted the ~46 GB pairs×arrays intermediate at 125× and went 3×
+    super-linear. Pinned ``cands`` arrive hash-partitioned on ``id_a``
+    from :func:`_prefix_join`, so join 1 adds no pair-side exchange."""
+    a = a.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a"))
+    b = b.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("sz").alias("sz_b"))
+    if pin:
+        cands, a = cands.hint(pin), _cluster(a, n_sc, "id_a")
+    j = cands.join(a, "id_a").join(_cluster(b, n_sc, "id_b").hint("shuffle_hash"), "id_b")
+    return j.filter(keep).select("id_a", "id_b", score)
 
 
 def ordered_shingle_index(sh: DataFrame) -> DataFrame:
@@ -385,42 +524,19 @@ def ordered_shingle_index(sh: DataFrame) -> DataFrame:
     return _memo_persist(_ORDERED_INDEX, ("ordered",), sh, build)
 
 
-def _verify_pairs_jaccard(cands: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard for candidate (id_a, id_b) pairs: fetch both
-    distinct-shingle arrays, |∩| via array_intersect. Both joins are
-    strategy-pinned: EVERY side here scales with the corpus (cands is
-    the candidate pair set, a/b carry the full shingle arrays), so
-    none may ever broadcast — highly repetitive pair/array columns
-    compress far below their in-memory size, and at a 125× sf0.1
-    replica AQE's compressed-bytes estimate slipped a corpus-scaled
-    side under the 64 MB session threshold and killed the driver with
-    "Not enough memory to build and broadcast" (r13; same class on the
-    containment/incremental twins). Shuffle-hash, not sort-merge, with
-    build sides chosen so the fat array-carrying stream is never
-    sorted (join 1 builds the narrow pairs, join 2 builds the
-    per-partition-bounded array side): a merge pin sorted the
-    pairs×arrays intermediate and went 3× super-linear on the
-    containment twin's 125× point.
-
-    ``cands`` arrives hash-partitioned on ``id_a`` — every candidate
-    producer repartitions its raw pairs by the probe key BEFORE the
-    pair dedup (:func:`_cluster_always` rationale) — so join 1 needs
-    no pair-side exchange here (2 Exchange → 1 per verify, r16)."""
-    n_sc = scaled_join_partitions(sh)
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("sz").alias("sz_b"))
-    j = (
-        cands.hint("shuffle_hash")
-        .join(_cluster(a, n_sc, "id_a"), "id_a")
-        .join(_cluster(b, n_sc, "id_b").hint("shuffle_hash"), "id_b")
-    )
+def _verify_pairs_jaccard(
+    cands: DataFrame,
+    a: DataFrame,
+    b: DataFrame,
+    threshold: float,
+    n_sc: "int | None",
+    pin: "str | None" = "shuffle_hash",
+) -> DataFrame:
+    """Exact Jaccard ≥ ``threshold`` over candidate (id_a, id_b) pairs
+    via :func:`_verify`: (id_a, id_b, jaccard)."""
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = inter.cast("double") / (F.col("sz_a") + F.col("sz_b") - inter).cast("double")
-    return (
-        j.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify(cands, a, b, jac.alias("jaccard"), jac >= threshold, n_sc, pin)
 
 
 def ngram_jaccard_pairs(
@@ -485,7 +601,11 @@ def ngram_jaccard_pairs(
         (id_col, text_col, n, round(threshold * 1_000_000), prefix_order),
         df,
         lambda: _verify_pairs_jaccard(
-            _candidate_pairs(sh, threshold, prefix_order), sh, threshold
+            _candidate_pairs(sh, threshold, prefix_order),
+            sh,
+            sh,
+            threshold,
+            scaled_join_partitions(sh),
         ),
     )
 
@@ -495,46 +615,9 @@ def _candidate_pairs(sh: DataFrame, threshold: float, prefix_order: str) -> Data
     inverted-index self-join (exact superset of the true ≥-threshold
     pairs). Exposed separately so skew tests can count candidates per
     prefix order without running verification."""
-    # One repartition of the shared exploded side serves both aliases
-    # (corpus-scaled count: the 250× no-spill wall).
-    n_sc = scaled_join_partitions(sh)
-    ex = _cluster(_prefix_tokens(sh, threshold, prefix_order), n_sc, "s")
-    a, b = ex.alias("a"), ex.alias("b")
-    num = round(threshold * 1_000_000)
-    # PPJoin positional filter: J ≥ t ⟺ overlap ≥ α = ⌈t/(1+t)·(|A|+|B|)⌉,
-    # and a pair first meeting at 0-based prefix positions (p_a, p_b) can
-    # overlap at most min(|A|−p_a, |B|−p_b) — prune below α.
-    alpha = _alpha(F.col("a.sz"), F.col("b.sz"), threshold)
-    ubound = F.least(F.col("a.sz") - F.col("a.p"), F.col("b.sz") - F.col("b.p"))
-    # Pinned shuffle-hash on the shingle key: BOTH sides are the
-    # exploded corpus prefix table — never broadcastable at scale (the
-    # 125× replica OOM class; _verify_pairs_jaccard rationale). Hash,
-    # not merge: rows are a handful of longs (cheap per-partition
-    # build), and a merge pin would force a full sort of both exploded
-    # sides — measured 1.7× slower on the containment twin at 125×.
-    raw = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.id") < F.col("b.id"))
-            # length filter: J ≥ t requires t·max(|A|,|B|) ≤ min(|A|,|B|)
-            & (
-                F.least(F.col("a.sz"), F.col("b.sz")) * 1_000_000
-                >= F.greatest(F.col("a.sz"), F.col("b.sz")) * num
-            )
-            & (ubound >= alpha),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    # Partition the RAW pairs by the verify probe key, THEN dedup:
-    # hash(id_a) satisfies the dedup's ClusteredDistribution(id_a,
-    # id_b) AND the verify join's ClusteredDistribution(id_a), so one
-    # deliberate exchange replaces the dedup's (id_a, id_b) exchange
-    # plus the verify's id_a exchange (2 Exchange → 1, r16; prefix
-    # collisions duplicate each pair only ~1.2× at sf0.1, so the raw
-    # rows crossing this single exchange cost less than the partial-
-    # dedup rows plus deduped rows crossing two).
-    return _cluster_always(raw, n_sc, "id_a").dropDuplicates(["id_a", "id_b"])
+    ex = _prefix_tokens(sh, threshold, prefix_order)
+    pred = (F.col("a.id") < F.col("b.id")) & _jaccard_bounds(threshold)
+    return _prefix_join(ex, ex, pred, scaled_join_partitions(sh))
 
 
 def dedup_by_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -709,40 +792,21 @@ def minhash_lsh_pairs(
         "id", *minhash_band_keys(n_bands, rows_per_band, seed, col="shm", pre_reduced=True)
     )
     n_sc = scaled_join_partitions(sh)
-    # Long format: one shuffle on (band_idx, band_key) instead of b joins.
-    ex = _cluster(
-        sig.select(
-            "id",
-            F.posexplode(F.array(*[F.col(f"bk{b}") for b in range(n_bands)])).alias("band", "key"),
-        ),
-        n_sc,
-        "band",
-        "key",
-    )
-    a, b_ = ex.alias("a"), ex.alias("b")
-    raw = (
-        # Pinned shuffle-hash: the banded-signature self-join's sides
-        # are both the full corpus's band keys — never broadcastable at
-        # scale (the 125× replica OOM class); hash not merge per the
-        # _candidate_pairs rationale.
-        a.join(
-            b_.hint("shuffle_hash"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-    # Probe-key partition before the dedup: one exchange serves dedup
-    # AND the verify join (the _candidate_pairs rationale, r16).
-    cands = _cluster_always(raw, n_sc, "id_a").dropDuplicates(["id_a", "id_b"])
-    return _verify_pairs_jaccard(cands, sh, threshold)
+    # Long format: one (id, s) row per band, s = band·P + key — a
+    # bijection of (band, key) since key < P — so one prefix-join
+    # kernel self-join on s replaces b joins.
+    ex = sig.select(
+        "id",
+        F.posexplode(F.array(*[F.col(f"bk{b}") for b in range(n_bands)])).alias("band", "key"),
+    ).select("id", (F.col("band").cast("long") * MINHASH_P + F.col("key")).alias("s"))
+    cands = _prefix_join(ex, ex, F.col("a.id") < F.col("b.id"), n_sc)
+    return _verify_pairs_jaccard(cands, sh, sh, threshold, n_sc)
 
 
 # --- SimHash -----------------------------------------------------------
 
 _SIMHASH_BITS = 64
-_BAND_BITS = 16  # 4 bands of 16 bits: candidates agree on ≥1 band → hamming ≤ 48 guaranteed caught... bands catch hamming ≤ 3 with high prob
+_BAND_BITS = 16  # 4 bands of 16 bits: by pigeonhole, recall is exact for hamming < 4 (n_bands)
 
 
 def simhash_signatures(
@@ -846,7 +910,7 @@ def banded_hamming_pairs(
     return (
         # Pinned shuffle-hash: both sides are the full corpus's exploded
         # band rows — never broadcastable at scale (the 125× replica
-        # OOM class); hash not merge per the _candidate_pairs rationale.
+        # OOM class); hash not merge per the _prefix_join rationale.
         a.join(
             b.hint("shuffle_hash"),
             (F.col("a.b_idx") == F.col("b.b_idx"))

@@ -132,10 +132,13 @@ def tfidf_top_terms(
     partial agg collapses every doc's term counts BEFORE its
     exchange, which therefore carries |distinct (doc, term)| rows,
     not raw occurrences. The df aggregation and the tf⨝df join both
-    derive from the SAME tf subtree, so AQE materializes the tf
-    exchange once and ReusedExchange-es the df branch; the df
-    aggregation itself ships only (term, partial count) rows, and
-    the join's term distribution is left to the planner — at bench
+    derive from the tf subtree, but the executed plan does NOT reuse
+    that exchange: the two (doc_id, term) subtrees differ, so the
+    price is two map-side-combined (doc_id, term) exchanges plus a
+    second tokenizing corpus scan (the r17 plan dump), paid for no
+    term-keyed shuffle of raw occurrences. The df aggregation itself
+    ships only (term, partial count) rows, and the join's term
+    distribution is left to the planner — at bench
     scale dfreq broadcasts (observed plan), at corpus scale the
     planner inserts the term exchange on tf rows (≤ one per (doc,
     term)). This replaces r16's deliberate repartition of the RAW
@@ -340,113 +343,32 @@ def containment_pairs(
     # Jaccard dedup the shingle scan is free (dedup.shingle_index memo).
     sh = D.shingle_index(df, id_col, text_col, n)
     num = round(threshold * 1_000_000)
-    cands = _containment_candidates(sh, threshold)
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    # Verify joins pinned shuffle-hash, build sides chosen so the fat
-    # array-carrying stream is NEVER sorted: join 1 builds the narrow
-    # candidate pairs, join 2 builds the per-partition-bounded array
-    # side and streams the wide intermediate. A merge pin here sorted
-    # the ~46 GB pairs×arrays intermediate at the 125× point and went
-    # super-linear (180 s vs ~25 s for the Jaccard twin); broadcast
-    # stays forbidden either way (the 125× replica OOM class —
-    # dedup._verify_pairs_jaccard rationale).
-    # cands arrive hash-partitioned on id_a (the candidate producer
-    # repartitions its raw pairs by the probe key before the dedup —
-    # dedup._cluster_always rationale): no pair-side exchange here
-    # (2 Exchange → 1 per verify, r16).
-    n_sc = D.scaled_join_partitions(sh)
-    return (
-        cands.hint("shuffle_hash")
-        .join(D._cluster(a, n_sc, "id_a"), "id_a")
-        .join(D._cluster(b, n_sc, "id_b").hint("shuffle_hash"), "id_b")
-        .withColumn("__inter", inter.cast("long"))
-        .filter((F.col("__inter") * 1_000_000 >= F.col("sz_a") * num) & (F.col("sz_a") > 0))
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("__inter").cast("double") / F.col("sz_a").cast("double")).alias("containment"),
-        )
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
+    return D._verify(
+        _containment_candidates(sh, threshold),
+        sh,
+        sh,
+        (inter.cast("double") / F.col("sz_a").cast("double")).alias("containment"),
+        (inter * 1_000_000 >= F.col("sz_a") * num) & (F.col("sz_a") > 0),
+        D.scaled_join_partitions(sh),
     )
 
 
 def _containment_candidates(sh: DataFrame, threshold: float) -> DataFrame:
-    """Distinct (id_a, id_b) containment candidates: probe a's
-    rarest-first prefix (length |Sa| − ⌈t·|Sa|⌉ + 1) into the df-ordered
-    POSITIONAL inverted index, with two exact integer filters:
-
-    - length: |Sb| ≥ t·|Sa| (since |Sa∩Sb| ≤ |Sb|), cross-multiplied.
-    - positional (the containment analogue of PPJoin's position
-      filter): overlap o ≥ K = ⌈t·|Sa|⌉, and with BOTH shingle arrays
-      sorted in the same global (df, hash) order, the smallest common
-      shingle c₁ is preceded in b only by non-common shingles — all o
-      common shingles sit at or after it — so c₁'s 0-based position
-      satisfies p_b ≤ |Sb| − K. Joining on b-tokens with
-      |Sb| − p_b ≥ K keeps c₁ for every true pair (exact superset
-      preserved; a-side p_a ≤ |Sa| − K is the prefix slice itself).
-
-    The b-side prune targets the boilerplate tail: a stop-phrase
-    shingle shared by m docs sits LAST in every df-ordered array
-    (maximal p_b), so it fails |Sb| − p_b ≥ K instead of emitting its
-    m(m−1) candidate pairs. On the synthetic sf0.1 corpus (few true
-    stop-phrases, mid-frequency shingles dominate) the measured
-    reduction is a modest 570k → 462k distinct candidates; on a
-    boilerplate-heavy crawl — where the hot-shingle quadratic lives —
-    the pruned tail is exactly the hot set. Both sides explode the
+    """Distinct (id_a, id_b) containment candidates: a's rarest-first
+    prefix (length |Sa| − ⌈t·|Sa|⌉ + 1) probes the df-ordered
+    POSITIONAL inverted index under the exact length and positional
+    filters of ``dedup._containment_bounds``. Both sides explode the
     SAME memoized ordered-index artifact the Jaccard prefix path
     builds, so the filter costs no extra corpus pass. Exposed
     separately so skew tests can count candidates without running
     verification (mirrors dedup._candidate_pairs)."""
-    num = round(threshold * 1_000_000)
-    n_sc = D.scaled_join_partitions(sh)
-    # ONE exploded-index exchange serves BOTH join sides (r17): the
-    # probe side is a position-filter over the same df-ordered
-    # posexplode the inverted side scans — slice(osh, 1, L) ≡ the
-    # p < L filter on posexplode(osh) — so deriving both from one
-    # _cluster(s) subtree lets AQE materialize that shuffle once and
-    # ReusedExchange the second side. The old shape paid two exchanges
-    # (full index 1.0× + prefix slice ~0.4× at t=0.6 = 1.4× exploded
-    # rows written); this writes 1.0× once. The Jaccard twin
-    # (dedup._candidate_pairs) already had this property because both
-    # its sides ARE the prefix table; here the sides differ only by
-    # the position filter, which sits above the shared exchange.
-    exploded = D._cluster(
-        D.ordered_shingle_index(sh).select(
-            "id", "sz", F.posexplode("osh").alias("p", "s")
-        ),
-        n_sc,
-        "s",
+    return D._prefix_join(
+        D._prefix_tokens(sh, threshold, "df"),
+        D._prefix_tokens(sh, None, "df"),
+        (F.col("a.id") != F.col("b.id")) & D._containment_bounds(threshold),
+        D.scaled_join_partitions(sh),
     )
-    prefix_len = (F.col("sz") - D._ceil_frac(F.col("sz"), threshold) + 1).cast("int")
-    pref = exploded.filter(F.col("p") < prefix_len).select(
-        F.col("id").alias("id_a"), F.col("sz").alias("psz_a"), "s"
-    )
-    inv = exploded.select(
-        F.col("id").alias("id_b"),
-        F.col("sz").alias("isz_b"),
-        F.col("p").alias("pb"),
-        "s",
-    )
-    k_a = D._ceil_frac(F.col("psz_a"), threshold)
-    # Pinned shuffle-hash with the (much smaller) prefix side as build:
-    # both exploded sides are corpus-scaled — never broadcastable at
-    # scale (the 125× replica OOM class) — and a merge pin here forced
-    # a full sort of the 60M-row exploded index side, measured 1.7×
-    # slower at 125× than hash-building the prefix rows per partition.
-    raw = (
-        pref.hint("shuffle_hash").join(
-            inv,
-            (pref["s"] == inv["s"])
-            & (F.col("id_a") != F.col("id_b"))
-            & (F.col("isz_b") * 1_000_000 >= F.col("psz_a") * num)
-            & (F.col("isz_b") - F.col("pb") >= k_a),
-        )
-        .select("id_a", "id_b")
-    )
-    # Probe-key partition before the dedup: one exchange serves dedup
-    # AND the verify join (dedup._cluster_always rationale, r16).
-    return D._cluster_always(raw, n_sc, "id_a").dropDuplicates(["id_a", "id_b"])
 
 
 # --- wave 3: mixture construction + corpus shape ---------------------
@@ -953,68 +875,19 @@ def incremental_jaccard_pairs(
 
     Output: (id_new, id_old, jaccard).
     """
-    num = round(threshold * 1_000_000)
     sh = D.shingle_index(df, id_col, text_col, n)
     n_sc = D.scaled_join_partitions(sh)
-    new_pred = F.col("id") % new_mod == 0
-    prefix_len = (F.col("sz") - D._ceil_frac(F.col("sz"), threshold) + 1).cast("int")
-    osh = D.ordered_shingle_index(sh)
-    pref = D._cluster(
-        osh.filter(new_pred)
-        .select("id", "sz", F.posexplode(F.slice("osh", 1, prefix_len)).alias("pn", "s"))
-        .select(F.col("id").alias("id_new"), F.col("sz").alias("sz_new"), "pn", "s"),
+    new = F.col("id") % new_mod == 0
+    # The batch here is NOT a trigger-bounded micro-batch (10% of the
+    # corpus), so both kernels keep their default shuffle-hash pins.
+    cands = D._prefix_join(
+        D._prefix_tokens(sh, threshold, "df").filter(new),
+        D._prefix_tokens(sh, None, "df").filter(~new),
+        D._jaccard_bounds(threshold),
         n_sc,
-        "s",
     )
-    inv = D._cluster(
-        osh.filter(~new_pred)
-        .select(
-            F.col("id").alias("id_old"),
-            F.col("sz").alias("sz_old"),
-            F.posexplode("osh").alias("po", "s"),
-        ),
-        n_sc,
-        "s",
-    )
-    alpha = D._alpha(F.col("sz_new"), F.col("sz_old"), threshold)
-    raw = (
-        # Pinned shuffle-hash with the (smaller, 10%-of-corpus) batch
-        # prefix side as build: the batch here is NOT a trigger-bounded
-        # micro-batch, so both exploded sides scale with the corpus —
-        # never broadcastable (the 125× replica OOM class); hash not
-        # merge per the containment-candidates rationale.
-        pref.hint("shuffle_hash").join(
-            inv,
-            (pref["s"] == inv["s"])
-            # length filter both ways: t·|A| ≤ |B| AND t·|B| ≤ |A|
-            & (F.col("sz_old") * 1_000_000 >= F.col("sz_new") * num)
-            & (F.col("sz_new") * 1_000_000 >= F.col("sz_old") * num)
-            & (F.col("sz_new") - F.col("pn") >= alpha)
-            & (F.col("sz_old") - F.col("po") >= alpha),
-        )
-        .select("id_new", "id_old")
-    )
-    # Probe-key partition before the dedup: one exchange serves dedup
-    # AND the verify join (dedup._cluster_always rationale, r16).
-    cands = D._cluster_always(raw, n_sc, "id_new").dropDuplicates(["id_new", "id_old"])
-    a = sh.select(F.col("id").alias("id_new"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a"))
-    b = sh.select(F.col("id").alias("id_old"), F.col("sh").alias("sh_b"), F.col("sz").alias("sz_b"))
-    # Pinned shuffle-hash (build: narrow pairs, then the array side —
-    # the fat stream is never sorted): both batch (10% of corpus) and
-    # corpus array sides are corpus-scaled — never broadcastable (the
-    # 125× replica OOM class; dedup._verify_pairs_jaccard rationale),
-    # clustered at the corpus-scaled count (the 250× no-spill wall).
-    j = (
-        cands.hint("shuffle_hash")
-        .join(D._cluster(a, n_sc, "id_new"), "id_new")
-        .join(D._cluster(b, n_sc, "id_old").hint("shuffle_hash"), "id_old")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter.cast("double") / (F.col("sz_a") + F.col("sz_b") - inter).cast("double")
-    return (
-        j.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_new", "id_old", "jaccard")
+    return D._verify_pairs_jaccard(cands, sh, sh, threshold, n_sc).toDF(
+        "id_new", "id_old", "jaccard"
     )
 
 
@@ -1268,7 +1141,6 @@ def incremental_pairs_vs_corpus(
 
     Output: (id_new, id_old, jaccard ≥ threshold).
     """
-    num = round(threshold * 1_000_000)
     sh_old = D.shingle_index(corpus_df, id_col, text_col, n)
     sh_new = (
         new_df.select(
@@ -1278,54 +1150,21 @@ def incremental_pairs_vs_corpus(
         .withColumn("sz", F.size("sh").cast("long"))
         .filter(F.col("sz") > 0)
     )
-    prefix_len = (F.col("sz") - D._ceil_frac(F.col("sz"), threshold) + 1).cast("int")
-    pref = sh_new.select(
-        F.col("id").alias("id_new"),
-        F.col("sz").alias("sz_new"),
-        F.posexplode(F.slice("sh", 1, prefix_len)).alias("pn", "s"),
+    # Unpinned (pin=None) micro-batch side, unclustered corpus index
+    # (n_sc None): broadcasting the trigger-bounded batch is the
+    # intended plan, so the full exploded corpus index never crosses an
+    # exchange. The verify's corpus array side stays pinned and
+    # clustered at the corpus-scaled count.
+    cands = D._prefix_join(
+        D._prefix_tokens(sh_new, threshold, "hash"),
+        D._prefix_tokens(sh_old, None, "hash"),
+        D._jaccard_bounds(threshold),
+        None,
+        pin=None,
     )
-    inv = sh_old.select(
-        F.col("id").alias("id_old"),
-        F.col("sz").alias("sz_old"),
-        F.posexplode("sh").alias("po", "s"),
-    )
-    alpha = D._alpha(F.col("sz_new"), F.col("sz_old"), threshold)
-    cands = (
-        pref.join(
-            inv,
-            (pref["s"] == inv["s"])
-            & (F.col("sz_old") * 1_000_000 >= F.col("sz_new") * num)
-            & (F.col("sz_new") * 1_000_000 >= F.col("sz_old") * num)
-            & (F.col("sz_new") - F.col("pn") >= alpha)
-            & (F.col("sz_old") - F.col("po") >= alpha),
-        )
-        .select("id_new", "id_old")
-        .dropDuplicates(["id_new", "id_old"])
-    )
-    a = sh_new.select(
-        F.col("id").alias("id_new"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a")
-    )
-    b = sh_old.select(
-        F.col("id").alias("id_old"), F.col("sh").alias("sh_b"), F.col("sz").alias("sz_b")
-    )
-    # The corpus side is pinned shuffle-hash (never broadcastable — the
-    # 125× replica OOM class; build = per-partition-bounded arrays, the
-    # fat stream never sorted) and clustered at the corpus-scaled
-    # count (the 250× no-spill wall) — the probe side auto-matches its
-    # partitioning, so no extra exchange. The NEW side stays unhinted
-    # and unclustered on purpose: a micro-batch is trigger-bounded,
-    # and broadcasting it is the intended streaming-ingest plan.
-    j = cands.join(a, "id_new").join(
-        D._cluster(b, D.scaled_join_partitions(sh_old), "id_old").hint("shuffle_hash"),
-        "id_old",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter.cast("double") / (F.col("sz_a") + F.col("sz_b") - inter).cast("double")
-    return (
-        j.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_new", "id_old", "jaccard")
-    )
+    return D._verify_pairs_jaccard(
+        cands, sh_new, sh_old, threshold, D.scaled_join_partitions(sh_old), pin=None
+    ).toDF("id_new", "id_old", "jaccard")
 
 
 def epoch_upsample(

@@ -72,23 +72,16 @@ def stream_incremental_dedup(
 
     def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
         pairs = incremental_pairs_vs_corpus(batch_df, corpus_df, n=n, threshold=threshold)
-        # foreachBatch hands a batch_df bound to a micro-batch-scoped
-        # session CLONE — the overwrite mode must be set on THAT
-        # session or the write runs static and wipes every earlier
-        # batch's partition (same pattern as
-        # windows.stream_to_parquet_exactly_once).
-        bspark = batch_df.sparkSession
-        prev = bspark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        bspark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                pairs.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("__batch_id")
-                .parquet(out_path)
-            )
-        finally:
-            bspark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # Dynamic overwrite as a per-write option, not a session conf:
+        # a static overwrite would wipe every earlier batch's partition,
+        # and the option leaves the caller's session untouched.
+        (
+            pairs.withColumn("__batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__batch_id")
+            .parquet(out_path)
+        )
 
     q = (
         new_docs_stream.writeStream.trigger(availableNow=True)

@@ -175,26 +175,95 @@ def test_window_frames_share_one_window_operator(spark, sf_dir):
 def test_pair_dedup_shares_probe_key_exchange(spark, sf_dir):
     """The r16 probe-key contract, pinned (ADVICE r16): every
     dedup-family candidate producer repartitions its RAW pairs on the
-    probe key (dedup._cluster_always), so the pair dedup and the
-    verify join plan WITHOUT an ENSURE_REQUIREMENTS exchange on the
-    full pair key. A hashpartitioning(id_a, id_b) exchange reappearing
-    in any of these plans means a caller stopped pre-partitioning and
-    Spark silently re-inserted the shuffle this family removed —
-    perf-only, invisible to correctness tests, caught here."""
-    keys = {
-        "x02_dedup_ngram_jaccard": ("id_a#", "id_b#"),
-        "x04_dedup_minhash_lsh": ("id_a#", "id_b#"),
-        "x38_containment": ("id_a#", "id_b#"),
-        "x54_incremental_dedup": ("id_new#", "id_old#"),
-    }
-    for q, (ka, kb) in keys.items():
+    probe key (dedup._prefix_join), so the pair dedup and the verify
+    join plan WITHOUT an ENSURE_REQUIREMENTS exchange on the full pair
+    key. A hashpartitioning(id_a, id_b) exchange reappearing in any of
+    these plans means a caller stopped pre-partitioning and Spark
+    silently re-inserted the shuffle this family removed — perf-only,
+    invisible to correctness tests, caught here. The positive check
+    keeps the negative one from passing vacuously: each plan must hold
+    the deliberate probe-key-only repartition, so a renamed pair
+    column fails here instead of matching nothing."""
+    import re
+
+    for q in (
+        "x02_dedup_ngram_jaccard",
+        "x04_dedup_minhash_lsh",
+        "x38_containment",
+        "x54_incremental_dedup",
+    ):
         plan = _formatted(matrix.QUERIES[q](spark, sf_dir))
         offenders = [
             ln
             for ln in plan.splitlines()
-            if "hashpartitioning(" in ln and ka in ln and kb in ln
+            if "hashpartitioning(" in ln and "id_a#" in ln and "id_b#" in ln
         ]
         assert not offenders, (q, offenders)
+        assert re.search(r"hashpartitioning\(id_a#\d+L?, \d+\), REPARTITION_BY_", plan), q
+
+
+def _own_plan_nodes(df) -> list:
+    """JVM nodes of ``df``'s executed (AQE final) plan, query stages
+    unwrapped, NOT descending into cached-relation subplans (the
+    memoized index builds)."""
+    out = []
+
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        out.append(node)
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_containment_exchanges_executed_plan(spark, sf_dir):
+    """x38 on the EXECUTED plan: the prefix join holds exactly 2
+    exchanges keyed on the shingle — the number dedup._prefix_join's
+    docstring states — one per side. The probe side explodes only the
+    prefix slice (not the full array behind a position filter) and
+    ships fewer rows than the full index side."""
+    from sql_engine_spark.operators import dedup as D
+
+    D.clear_shingle_index()
+    df = matrix.QUERIES["x38_containment"](spark, sf_dir)
+    df.collect()  # finalizes this df's own adaptive plan
+    sides = {}
+    for node in _own_plan_nodes(df):
+        if node.getClass().getSimpleName() != "ShuffleExchangeExec":
+            continue
+        if not node.simpleString(100).startswith("Exchange hashpartitioning(s#"):
+            continue
+        child = node
+        while child.getClass().getSimpleName() != "GenerateExec":
+            assert child.children().size() == 1, child.simpleString(100)
+            child = child.children().apply(0)
+        kind = "prefix" if "posexplode(slice(" in child.simpleString(200) else "full"
+        sides[kind] = node.metrics().apply("shuffleRecordsWritten").value()
+    assert sorted(sides) == ["full", "prefix"], sides
+    assert "holds exactly 2" in D._prefix_join.__doc__
+    assert 0 < sides["prefix"] < sides["full"], sides
+
+
+def test_stream_probe_never_exchanges_corpus_index(spark, sf_dir):
+    """The streaming ingest probe (s08's per-batch plan) runs the
+    prefix-join kernel unpinned: the micro-batch prefix side
+    broadcasts, so the executed plan holds NO shingle-keyed shuffle —
+    the full exploded corpus index is never exchanged per batch."""
+    from sql_engine_spark.operators.pipeline import incremental_pairs_vs_corpus
+
+    docs = load_table(spark, sf_dir, "documents")
+    df = incremental_pairs_vs_corpus(docs.filter(F.col("doc_id") % 10 == 0), docs)
+    df.collect()
+    names = [n.simpleString(100) for n in _own_plan_nodes(df)]
+    assert not [n for n in names if n.startswith("Exchange hashpartitioning(s#")], names
+    assert any(n.startswith("BroadcastExchange") for n in names), names
 
 
 def test_stratified_sample_single_shuffle(spark, sf_dir):
